@@ -1,5 +1,5 @@
-"""Spatial joins: broadcast-then-refine point-in-polygon, bbox join,
-grid-partitioned kNN with candidate-cell expansion.
+"""Spatial joins: point-in-polygon, areal-areal, bbox, distance and
+grid-partitioned kNN joins.
 
 This module is the engine's "logical rewrite" layer (SURVEY.md §4.2):
 spatial theta-joins are rewritten at DataFrame-construction time into
@@ -7,17 +7,18 @@ spatial theta-joins are rewritten at DataFrame-construction time into
 so Catalyst sees plain equi-joins it can broadcast/AQE-optimize, and the
 only UDF in the plan is the vectorized ray-cast refine.
 
-Scale design:
-  * polygon side: covered into cells ONCE on the driver (dimension tables
-    are small — countries/zones; the covering is what gets broadcast, not
-    the raw geometry), with per-cell `full` flags so interior cells skip
-    the ray-cast entirely (most of a large polygon's area).
-  * point side: never shuffled for the join — `cell_encode` is a column
-    expression and the join is `broadcast(cover)`, so the probe side
-    streams map-side. groupBy after the join shuffles only the aggregate.
-  * skew: hot cells are a broadcast-join non-issue (no shuffle); for the
-    non-broadcast path `salt` replicates the cover S ways and salts the
-    probe side (SURVEY.md §2.2 skew row), plus AQE skew-join stays on.
+The point-in-polygon join (``spatial_join``, ``pip_tile_counts``) has
+two tiers, chosen by one collect gate:
+  * driver: a dimension-sized polygon side (countries/zones) is covered
+    into cells ONCE on the driver, with per-cell `full` flags so
+    interior cells skip the ray cast entirely (most of a large
+    polygon's area). The cover is broadcast, so the point side is never
+    shuffled for the join and hot cells cost nothing extra.
+  * distributed: a polygon side over the gate is covered on executors
+    and never collected. The cover is broadcast while it is small next
+    to the point side, else joined shuffled-hash; AQE's skew join splits
+    hot cells at run time (static key splitting measured slower in
+    every case, BENCH/SKEW.md).
 """
 
 from __future__ import annotations
@@ -31,6 +32,33 @@ from ..kernels.geom import Geom
 from ..kernels.ops import point_in_rings
 from ..kernels.wkb import parse_wkb
 from ..materialize import materialize
+
+# Driver-tier collect gate: a polygon side whose optimizer size estimate
+# exceeds DRIVER_MAX_POLY_BYTES (zero jobs — a limit(cap+1) probe was
+# measured at +0.45 s per call even on a 3-row dim), or whose collected
+# row count exceeds DRIVER_MAX_POLYGONS (backstop for estimates that
+# lie), takes the distributed tier instead of OOMing the driver.
+DRIVER_MAX_POLY_BYTES = 256 << 20
+DRIVER_MAX_POLYGONS = 100_000
+# Distributed-tier broadcast: broadcasting the cover saves shuffling the
+# point side but ships (cover bytes x every executor) plus a driver-side
+# relation build. Broadcast while the exact cover row count is under
+# BROADCAST_MAX_COVER_ROWS and the point side outweighs the cover by
+# BROADCAST_COST_FACTOR; else a shuffled-hash join with the cover as
+# build side (measured at sf1: 1.4 s vs 2.3 s core when points are not
+# much bigger than the cover; broadcast wins by orders of magnitude when
+# points dwarf it).
+BROADCAST_MAX_COVER_ROWS = 4_000_000
+BROADCAST_COST_FACTOR = 8
+# Driver-tier refine: measured crossover (2M points, local[8],
+# hugeMethodLimit 8000, both single-pass), expr vs udf walls — 72 edges
+# 1.0/0.8 s, 288 edges 3.5/1.0, 576 edges 4.3/0.9, 4096 edges 23.6/1.1:
+# the unrolled CASE blows janino's 64 KB method cap past a few hundred
+# edges (the whole stage drops to interpreted) and at 8192 building the
+# expression OOMs the driver; the vectorized udf is flat in edge count.
+# Up to this many edges the expr tier keeps the plan Python-free (and
+# bit-identical to the DuckDB twins of the oracle queries).
+EXPR_REFINE_MAX_EDGES = 128
 
 
 def _geom_rings(g: Geom) -> list[list[np.ndarray]]:
@@ -52,11 +80,11 @@ def polygon_cover(polys: list[tuple[int, bytes | None]], res: int
     {poly_id: polygons-as-rings}). ``full=True`` cells are entirely
     inside the polygon (refine skipped). Null/EMPTY polygons cover
     nothing (reference null/empty semantics end to end)."""
+    from ..kernels.ops import seg_rect_intersect
     cover: list[tuple[int, int, bool]] = []
     ring_map: dict[int, list[list[np.ndarray]]] = {}
     for pid, wkb in polys:
-        g = parse_wkb(wkb) if wkb is not None else None
-        pgs = _geom_rings(g) if g is not None else []
+        pgs = _geom_rings(parse_wkb(wkb)) if wkb is not None else []
         if not pgs:
             continue
         ring_map[pid] = pgs
@@ -66,7 +94,6 @@ def polygon_cover(polys: list[tuple[int, bytes | None]], res: int
             if cells.size == 0:
                 continue
             # full-containment: center inside AND no edge bbox overlaps
-            from ..kernels.ops import seg_rect_intersect
             x0, y0, x1, y1 = cell_bounds_np(cells)
             cx, cy = (x0 + x1) / 2, (y0 + y1) / 2
             center_in = point_in_rings(cx, cy, rings)
@@ -80,13 +107,25 @@ def polygon_cover(polys: list[tuple[int, bytes | None]], res: int
     return cover, ring_map
 
 
+def _res_for_area(med: float | None, min_res: int, max_res: int,
+                  target_cells_per_poly: int) -> int:
+    """Smallest res whose cell count over a median-area bbox reaches the
+    target — balances explode factor (cover size) against
+    candidates-per-cell (refine cost)."""
+    if med is None:
+        return min_res
+    for res in range(min_res, max_res + 1):
+        cell = (360.0 / (1 << res)) * (180.0 / (1 << res))
+        if med / cell >= target_cells_per_poly:
+            return res
+    return max_res
+
+
 def pick_resolution(polys: list[tuple[int, bytes | None]],
                     min_res: int = 4, max_res: int = 12,
                     target_cells_per_poly: int = 64) -> int:
-    """Resolution selection (SURVEY.md §4.2 item 3): smallest res whose
-    expected bbox-cover size per polygon reaches the target — balances
-    explode factor (broadcast size) against candidates-per-cell (refine
-    cost). Driver-side, envelope math only."""
+    """Resolution selection (SURVEY.md §4.2 item 3) over collected
+    polygons: driver-side, envelope math only."""
     from ..kernels.ops import geom_envelope
     areas = []
     for _, wkb in polys:
@@ -97,14 +136,8 @@ def pick_resolution(polys: list[tuple[int, bytes | None]],
         if np.isnan(x0):
             continue
         areas.append(max(x1 - x0, 1e-9) * max(y1 - y0, 1e-9))
-    if not areas:
-        return min_res
-    med = float(np.median(areas))
-    for res in range(min_res, max_res + 1):
-        cell_deg_x, cell_deg_y = 360.0 / (1 << res), 180.0 / (1 << res)
-        if med / (cell_deg_x * cell_deg_y) >= target_cells_per_poly:
-            return res
-    return max_res
+    return _res_for_area(float(np.median(areas)) if areas else None,
+                         min_res, max_res, target_cells_per_poly)
 
 
 def refine_expr_col(ring_map: dict[int, list[list[np.ndarray]]],
@@ -136,65 +169,83 @@ def total_edges(ring_map: dict[int, list[list[np.ndarray]]]) -> int:
                for rings in pgs for r in rings)
 
 
-def make_refine_udf(ring_map: dict[int, list[list[np.ndarray]]]):
-    """(poly_id, lon, lat) -> bool pandas UDF. The ring map travels in
-    the closure (pickled once, reused per executor); the batch is grouped
-    by poly_id so each polygon's ray-cast runs vectorized over its
-    points.
+def _wkb_rings(wkbs) -> list[list[list[np.ndarray]]]:
+    """Polygon WKBs -> polygons-as-rings for each (as ``_geom_rings``).
+    Little-endian POLYGON rows decode in ONE vectorized batch pass
+    (ragged ring views into two flat coordinate arrays); multipolygons,
+    big-endian and null rows take the general codec."""
+    from ..functions.geometry import _series_to_wkb_buffers
+    from ..kernels.wkb import parse_polygon_wkb_buffer
+    pb = parse_polygon_wkb_buffer(
+        *_series_to_wkb_buffers(pd.Series(list(wkbs), dtype=object)))
+    idx = np.arange(len(wkbs))
+    lo = np.searchsorted(pb.poly_of_ring, idx)
+    hi = np.searchsorted(pb.poly_of_ring, idx + 1)
+    out = []
+    for i, w in enumerate(wkbs):
+        if pb.ok[i]:
+            rings = [np.column_stack((pb.xs[s:s + k], pb.ys[s:s + k]))
+                     for s, k in zip(pb.ring_row_start[lo[i]:hi[i]],
+                                     pb.ring_rows[lo[i]:hi[i]])]
+            out.append([rings] if rings else [])
+        else:
+            out.append(_geom_rings(parse_wkb(bytes(w)))
+                       if w is not None else [])
+    return out
 
-    NULL poly_id rows return False at O(1) cost — the caller gates the
-    udf input with ``when(~_full, pid)`` so interior rows ride the same
-    single filter pass without paying a ray-cast (Spark extracts Python
-    UDFs from the plan unconditionally, so per-row short-circuit is
-    impossible; per-row CHEAPNESS is the next best thing)."""
+
+def ray_cast_refine(key: pd.Series, x: np.ndarray, y: np.ndarray,
+                    ring_map: dict[int, list[list[np.ndarray]]]
+                    | None = None) -> np.ndarray:
+    """Grouped even-odd ray cast: row i tests (x[i], y[i]) against the
+    polygon its key names — a poly id looked up in ``ring_map``, or,
+    without one, the polygon's WKB bytes (each distinct polygon of the
+    batch decoded once). Rows are grouped by key so each polygon's ray
+    cast runs vectorized over its points; null keys are False at O(1)
+    cost, which is how callers skip interior cells."""
+    codes, uniq = pd.factorize(key, use_na_sentinel=True)
+    polys = (_wkb_rings(uniq) if ring_map is None
+             else [ring_map.get(int(p), []) for p in uniq])
+    out = np.zeros(len(key), dtype=bool)
+    for ci, pgs in enumerate(polys):
+        sel = codes == ci
+        for rings in pgs:
+            out[sel] |= point_in_rings(x[sel], y[sel], rings)
+    return out
+
+
+def ray_cast_refine_udf(ring_map: dict[int, list[list[np.ndarray]]]
+                        | None = None):
+    """(key, lon, lat) -> boolean pandas UDF over :func:`ray_cast_refine`.
+    A ring map travels in the closure (pickled once, reused per
+    executor). Spark extracts Python UDFs from the plan unconditionally
+    (no per-row short-circuit even under when/otherwise), so callers
+    NULL-gate the key on rows the JVM already decided: those pay only
+    the Arrow transfer.
+
+    Created lazily per call: module-level pandas_udf crashes on worker
+    re-import (see functions/geometry.py)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("boolean")
-    def refine(pid: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = np.zeros(len(pid), dtype=bool)
-        pids = pid.to_numpy(dtype=np.float64, na_value=np.nan)
-        x = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        y = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        for p in np.unique(pids[~np.isnan(pids)]):
-            sel = pids == p
-            hit = np.zeros(int(sel.sum()), dtype=bool)
-            for rings in ring_map.get(int(p), []):
-                hit |= point_in_rings(x[sel], y[sel], rings)
-            out[sel] = hit
-        return pd.Series(out)
+    def refine(key: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
+        return pd.Series(ray_cast_refine(
+            key, lon.to_numpy(dtype=np.float64, na_value=np.nan),
+            lat.to_numpy(dtype=np.float64, na_value=np.nan), ring_map))
 
     return refine
 
 
-def _rect_of(pgs: list[list[np.ndarray]]
-             ) -> tuple[bool, float, float, float, float]:
-    """(is_axis_aligned_rectangle, x0, y0, x1, y1) of a parsed polygon.
-    Structural check (1 ring, 5 rows, 2 distinct x, 2 distinct y, every
-    edge axis-aligned) — exact, no float tolerance games."""
-    if len(pgs) != 1 or len(pgs[0]) != 1:
-        return False, 0.0, 0.0, 0.0, 0.0
-    r = pgs[0][0]
-    if r.shape[0] != 5:
-        return False, 0.0, 0.0, 0.0, 0.0
-    xs, ys = np.unique(r[:4, 0]), np.unique(r[:4, 1])
-    if xs.size != 2 or ys.size != 2:
-        return False, 0.0, 0.0, 0.0, 0.0
-    dx, dy = np.diff(r[:, 0]), np.diff(r[:, 1])
-    if not bool(np.all((dx == 0) | (dy == 0))):
-        return False, 0.0, 0.0, 0.0, 0.0
-    return (True, float(xs[0]), float(ys[0]), float(xs[1]), float(ys[1]))
-
-
 def _make_rect_info_udf():
     """geom_wkb -> struct(rect, x0, y0, x1, y1): fully vectorized
-    axis-aligned-rectangle detection over the batch WKB buffers (same
-    structural criteria as :func:`_rect_of` — 1 ring, 5 rows, closed,
-    2 distinct x, 2 distinct y, every edge axis-aligned — no float
-    tolerance). One cheap Arrow pass over the polygon side replaces
-    per-polygon Python covering for the rectangle-dominant case.
-    Big-endian / EWKB-exotic rectangles fall outside the LE fast
-    parser and are reported rect=False — they take the (exact, slower)
-    general covering tier instead; output is unchanged.
+    axis-aligned-rectangle detection over the batch WKB buffers
+    (structural: 1 ring, 5 rows, closed, 2 distinct x, 2 distinct y,
+    every edge axis-aligned — no float tolerance). One cheap Arrow pass
+    over the polygon side replaces per-polygon Python covering for the
+    rectangle-dominant case. Big-endian / EWKB-exotic rectangles fall
+    outside the LE fast parser and are reported rect=False — they take
+    the (exact, slower) general covering tier instead; output is
+    unchanged.
 
     Created lazily per call: module-level pandas_udf crashes on worker
     re-import (see functions/geometry.py)."""
@@ -245,32 +296,56 @@ def _make_rect_info_udf():
     return info
 
 
+def _cell_ranges(x0, y0, x1, y1, res: int):
+    """Closed-intersect cell index ranges (ix0, ix1, iy0, iy1) of the
+    box [x0, x1] x [y0, y1] at ``res``, as long columns clamped to the
+    grid: cell i intersects [x0, x1] iff i >= ceil((x0+180)/360*n) - 1
+    and i <= floor((x1+180)/360*n). The ceil-1 form includes the cell
+    whose RIGHT edge merely touches x0 (and floor the one whose left
+    edge touches x1), mirroring the Python covering's closed bbox
+    overlap."""
+    from pyspark.sql import functions as F
+    n = 1 << res
+    zero, nmax = F.lit(0).cast("long"), F.lit(n - 1).cast("long")
+    return (F.greatest(zero, F.ceil((x0 + 180.0) / 360.0 * n)
+                       .cast("long") - 1),
+            F.least(nmax, F.floor((x1 + 180.0) / 360.0 * n).cast("long")),
+            F.greatest(zero, F.ceil((y0 + 90.0) / 180.0 * n)
+                       .cast("long") - 1),
+            F.least(nmax, F.floor((y1 + 90.0) / 180.0 * n).cast("long")))
+
+
 def distributed_polygon_cover(polys_df, res: int,
                               poly_id_col: str = "zone_id",
                               geom_col: str = "geom_wkb"):
     """Covering computed ON EXECUTORS: -> DataFrame(poly_id, _cell,
-    _full, _rect, _bx0.._by1). The polygon side stays a DataFrame end
-    to end — the driver never collects geometry, so a million-polygon
-    side scales out instead of OOMing the driver (round-1 gap:
-    polygon_cover ran driver-side).
+    _full, _rect, _bx0.._by1, _gwkb). The polygon side stays a DataFrame
+    end to end — the driver never collects geometry, so a
+    million-polygon side scales out instead of OOMing the driver.
 
-    Two tiers (r5): axis-aligned rectangles — the typical LARGE
-    polygon side (parcels, tiles, boxes) — are detected by one
-    vectorized Arrow pass and covered with PURE JVM column expressions
-    (sequence + explode over the closed-intersect cell index ranges,
-    exact integer cell-id arithmetic identical to cells.cell_encode);
-    only the non-rectangular residue pays the per-polygon Python
-    covering (mapInPandas, repartitioned to the full core budget — a
-    polygon table stored as k files otherwise caps covering
-    parallelism at k). Measured at sf1 (200k boxes, 6M points): the
-    all-Python covering was 9.7 s of the join's 10.3 s wall; the JVM
-    tier removes it. Cell ranges are closed-intersect (a rect touching
-    a cell only on its boundary still covers it) — matching the
-    Python covering's closed bbox overlap, which poly_join's
-    shared-boundary semantics relies on. ``_full`` is the exact
-    cell-inside-rect test (left/bottom closed, right/top open, the
-    same convention as the rect refine tier)."""
+    Two tiers: axis-aligned rectangles — the typical LARGE polygon side
+    (parcels, tiles, boxes) — are detected by one vectorized Arrow pass
+    and covered with PURE JVM column expressions (sequence + explode
+    over the closed-intersect cell index ranges, exact integer cell-id
+    arithmetic identical to cells.cell_encode); only the non-rectangular
+    residue pays the per-polygon Python covering (mapInPandas,
+    repartitioned to the full core budget — a polygon table stored as k
+    files otherwise caps covering parallelism at k). Measured at sf1
+    (200k boxes, 6M points): the all-Python covering was 9.7 s of the
+    join's 10.3 s wall; the JVM tier removes it. Cell ranges are
+    closed-intersect (a rect touching a cell only on its boundary still
+    covers it) — matching the Python covering's closed bbox overlap,
+    which poly_join's shared-boundary semantics relies on. ``_full`` is
+    the exact cell-inside-rect test (left/bottom closed, right/top open,
+    the same convention as the rect refine tier).
+
+    The result carries ``_geospark_cover_stats``: polygon count
+    (``n_polys``), non-rect residue count (``n_gen``; 0 means the cover
+    is a pure column-expression subtree) and the EXACT exploded row
+    count of the rect cover (``rect_rows``)."""
     from pyspark.sql import functions as F
+
+    from .par import fanout_repartition
     schema = (f"{poly_id_col} long, _cell long, _full boolean, "
               f"_rect boolean, _bx0 double, _by0 double, "
               f"_bx1 double, _by1 double, _gwkb binary")
@@ -301,48 +376,29 @@ def distributed_polygon_cover(polys_df, res: int,
                               "_by1": pd.Series([], dtype="float64"),
                               "_gwkb": pd.Series([], dtype="object")})
 
-    # Freeze the DETECTION output (200k rows for a 200k-polygon side),
-    # not the exploded cover (2.3M rows): the Python detect pass then
-    # runs exactly once however many branches reference the cover, the
-    # tiny one-row-per-polygon checkpoint replaces the cover-sized one,
-    # and the pure-JVM explode below stays INLINE in the consumer's
-    # plan — for an all-rect side the scan->explode->join fuses into
-    # one codegen stage with no Python and no cover materialization.
-    # r6: the polygon side is typically a handful of parquet files —
-    # the Arrow detect pass would run on that many cores; one cheap
-    # conditional exchange spreads it (guide §2.6). The checkpoint is
-    # LAZY and geometry-free: the stats agg right below materializes
-    # it in the same job (one job instead of eager-checkpoint + agg),
-    # and the frozen rows carry only (id, _ri) — the general tier
-    # re-joins the polygon geometry by id from the source, so an
-    # all-rect side never checkpoints its WKB payload at all.
-    from .par import fanout_repartition
+    # Freeze the DETECTION output (one row per polygon), not the
+    # exploded cover: the Python detect pass then runs exactly once
+    # however many branches reference the cover, and the pure-JVM
+    # explode below stays INLINE in the consumer's plan — for an
+    # all-rect side the scan->explode->join fuses into one codegen
+    # stage with no Python and no cover materialization. The polygon
+    # side is typically a handful of parquet files, so one cheap
+    # conditional exchange spreads the Arrow detect pass (guide §2.6).
+    # The checkpoint is LAZY and geometry-free: the stats agg below
+    # materializes it in the same job, and the general tier re-joins
+    # the polygon geometry by id from the source.
     info = materialize(fanout_repartition(polys_df).select(
         poly_id_col,
         _make_rect_info_udf()(F.col(geom_col)).alias("_ri")),
         eager=False)
 
-    from ..functions.cells import _RES_SHIFT
-    n = 1 << res
     x0, y0 = F.col("_bx0"), F.col("_by0")
     x1, y1 = F.col("_bx1"), F.col("_by1")
-    zero, nmax = F.lit(0).cast("long"), F.lit(n - 1).cast("long")
-    # closed-intersect index range: cell i intersects [x0, x1] iff
-    # (i+1)*step > x0-ish — exactly i >= ceil((x0+180)/360*n) - 1 and
-    # i <= floor((x1+180)/360*n); the ceil-1 form includes the cell
-    # whose RIGHT edge merely touches x0 (and floor the one whose left
-    # edge touches x1), mirroring the Python covering's closed bbox
-    # overlap
-    ix0 = F.greatest(zero, F.ceil((x0 + 180.0) / 360.0 * n)
-                     .cast("long") - 1)
-    ix1 = F.least(nmax, F.floor((x1 + 180.0) / 360.0 * n).cast("long"))
-    iy0 = F.greatest(zero, F.ceil((y0 + 90.0) / 180.0 * n)
-                     .cast("long") - 1)
-    iy1 = F.least(nmax, F.floor((y1 + 90.0) / 180.0 * n).cast("long"))
-    cx0 = F.col("_ix") * (360.0 / n) - 180.0
-    cx1 = (F.col("_ix") + 1) * (360.0 / n) - 180.0
-    cy0 = F.col("_iy") * (180.0 / n) - 90.0
-    cy1 = (F.col("_iy") + 1) * (180.0 / n) - 90.0
+    ix0, ix1, iy0, iy1 = _cell_ranges(x0, y0, x1, y1, res)
+    cx0 = F.col("_ix") * (360.0 / (1 << res)) - 180.0
+    cx1 = (F.col("_ix") + 1) * (360.0 / (1 << res)) - 180.0
+    cy0 = F.col("_iy") * (180.0 / (1 << res)) - 90.0
+    cy1 = (F.col("_iy") + 1) * (180.0 / (1 << res)) - 90.0
     rcov = (info.filter(F.col("_ri.rect"))
             .select(poly_id_col,
                     F.col("_ri.x0").alias("_bx0"),
@@ -367,31 +423,17 @@ def distributed_polygon_cover(polys_df, res: int,
                     "_bx0", "_by0", "_bx1", "_by1",
                     F.lit(None).cast("binary").alias("_gwkb")))
 
-    gen = (info.filter(~F.col("_ri.rect")).select(poly_id_col)
-           .join(polys_df.select(poly_id_col, geom_col), poly_id_col))
-    # r6: ONE tiny agg over the frozen info replaces three separate
-    # per-call jobs (the old `gen.limit(1).count()` tier probe, the
-    # caller's `n_polys` count for the broadcast decision, and its
-    # 64-cells/poly guess): polygon count, non-rect residue count, and
-    # the EXACT exploded row count of the rect cover (the same clamped
-    # closed-intersect index ranges the explode below materializes).
-    n = 1 << res
-    sx0, sy0 = F.col("_ri.x0"), F.col("_ri.y0")
-    sx1, sy1 = F.col("_ri.x1"), F.col("_ri.y1")
-    zero_l = F.lit(0).cast("long")
-    nmax_l = F.lit(n - 1).cast("long")
-    six0 = F.greatest(zero_l, F.ceil((sx0 + 180.0) / 360.0 * n)
-                      .cast("long") - 1)
-    six1 = F.least(nmax_l, F.floor((sx1 + 180.0) / 360.0 * n)
-                   .cast("long"))
-    siy0 = F.greatest(zero_l, F.ceil((sy0 + 90.0) / 180.0 * n)
-                      .cast("long") - 1)
-    siy1 = F.least(nmax_l, F.floor((sy1 + 90.0) / 180.0 * n)
-                   .cast("long"))
+    # ONE tiny agg over the frozen info: polygon count, non-rect residue
+    # count, and the EXACT exploded row count of the rect cover (the
+    # same clamped index ranges the explode above materializes).
+    six0, six1, siy0, siy1 = _cell_ranges(
+        F.col("_ri.x0"), F.col("_ri.y0"), F.col("_ri.x1"),
+        F.col("_ri.y1"), res)
+    zero = F.lit(0).cast("long")
     rect_rows = F.when(
         F.col("_ri.rect"),
-        F.greatest(zero_l, six1 - six0 + 1)
-        * F.greatest(zero_l, siy1 - siy0 + 1)).otherwise(F.lit(0))
+        F.greatest(zero, six1 - six0 + 1)
+        * F.greatest(zero, siy1 - siy0 + 1)).otherwise(F.lit(0))
     st = info.agg(
         F.count(F.lit(1)).alias("_np"),
         F.sum(F.when(F.col("_ri.rect"), 0).otherwise(1)).alias("_ng"),
@@ -400,68 +442,17 @@ def distributed_polygon_cover(polys_df, res: int,
              "n_gen": int(st["_ng"] or 0),
              "rect_rows": int(st["_rr"] or 0)}
     # all-rect side (tiles/boxes/parcels — the common storage shape):
-    # skip the general union branch AT PLAN TIME, so the returned cover
-    # is a pure column-expression subtree.
+    # skip the general union branch AT PLAN TIME
     if stats["n_gen"] == 0:
-        # consumers key on this: a pure-JVM cover needs no cover-sized
-        # materialization to be referenced from multiple branches
-        rcov._geospark_pure_jvm = True
-        rcov._geospark_cover_stats = stats
-        return rcov
-    par = polys_df.sparkSession.sparkContext.defaultParallelism
-    gcov = gen.repartition(par).mapInPandas(fn, schema=schema)
-    out = rcov.unionByName(gcov)
+        out = rcov
+    else:
+        gen = (info.filter(~F.col("_ri.rect")).select(poly_id_col)
+               .join(polys_df.select(poly_id_col, geom_col), poly_id_col))
+        par = polys_df.sparkSession.sparkContext.defaultParallelism
+        out = rcov.unionByName(
+            gen.repartition(par).mapInPandas(fn, schema=schema))
     out._geospark_cover_stats = stats
     return out
-
-
-def make_wkb_refine_udf():
-    """(geom_wkb, lon, lat) -> bool pandas UDF for the distributed
-    path: the polygon geometry arrives as a column (joined on poly_id),
-    not a driver-pickled closure. Each batch groups rows by identical
-    WKB bytes so every polygon's ray-cast runs vectorized over its
-    points (one parse per distinct polygon per batch)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def refine(wkb: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        from ..functions.geometry import _series_to_wkb_buffers
-        from ..kernels.wkb import parse_polygon_wkb_buffer
-        out = np.zeros(len(wkb), dtype=bool)
-        x = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        y = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        codes, uniq = pd.factorize(wkb, use_na_sentinel=True)
-        # decode ALL distinct polygons in one vectorized batch pass
-        # (ragged ring views into two flat coord arrays); the per-
-        # distinct loop below only slices views and ray-casts
-        useries = pd.Series(list(uniq), dtype=object)
-        data, offs, val = _series_to_wkb_buffers(useries)
-        pbatch = parse_polygon_wkb_buffer(data, offs, val)
-        ring_lo = np.searchsorted(pbatch.poly_of_ring,
-                                  np.arange(len(uniq)))
-        ring_hi = np.searchsorted(pbatch.poly_of_ring,
-                                  np.arange(len(uniq)) + 1)
-        for ci, w in enumerate(uniq):
-            sel = codes == ci
-            hit = np.zeros(int(sel.sum()), dtype=bool)
-            if pbatch.ok[ci]:
-                rings = []
-                for ri in range(ring_lo[ci], ring_hi[ci]):
-                    st = pbatch.ring_row_start[ri]
-                    en = st + pbatch.ring_rows[ri]
-                    rings.append(np.column_stack((pbatch.xs[st:en],
-                                                  pbatch.ys[st:en])))
-                if rings:
-                    hit = point_in_rings(x[sel], y[sel], rings)
-            else:  # multipolygon / big-endian / null: general codec
-                g = parse_wkb(bytes(w)) if w is not None else None
-                pgs = _geom_rings(g) if g is not None else []
-                for rings in pgs:
-                    hit |= point_in_rings(x[sel], y[sel], rings)
-            out[sel] = hit
-        return pd.Series(out)
-
-    return refine
 
 
 def _pick_resolution_distributed(polys_df, geom_col: str,
@@ -475,301 +466,178 @@ def _pick_resolution_distributed(polys_df, geom_col: str,
     env = polys_df.select(st_envelope(geom_col).alias("e"))
     area = ((F.col("e.xmax") - F.col("e.xmin"))
             * (F.col("e.ymax") - F.col("e.ymin")))
-    row = env.select(area.alias("a")).filter(F.col("a") > 0) \
-        .agg(F.percentile_approx("a", 0.5).alias("med")).collect()[0]
-    med = float(row["med"]) if row["med"] is not None else None
-    if med is None:
-        return min_res
-    for res in range(min_res, max_res + 1):
-        cell = (360.0 / (1 << res)) * (180.0 / (1 << res))
-        if med / cell >= target_cells_per_poly:
-            return res
-    return max_res
+    med = env.select(area.alias("a")).filter(F.col("a") > 0) \
+        .agg(F.percentile_approx("a", 0.5).alias("med")).collect()[0][0]
+    return _res_for_area(float(med) if med is not None else None,
+                         min_res, max_res, target_cells_per_poly)
 
 
-def spatial_join(points, polys_df, *, res: int | None = None,
-                 lat_col: str = "lat", lon_col: str = "lon",
-                 poly_id_col: str = "zone_id", geom_col: str = "geom_wkb",
-                 how: str = "inner", broadcast_cover: bool | None = None,
-                 salt: int = 0, refine_mode: str = "auto",
-                 distributed: bool = False):
-    """Point-in-polygon join.
+def _est_bytes(df) -> int | None:
+    """The optimizer's size estimate of ``df`` (zero jobs), or None when
+    unknown: Long.MaxValue marks LogicalRDD sources (createDataFrame
+    locals, checkpoints)."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan()
+                  .stats().sizeInBytes())
+    except Exception:
+        return None
+    return est if est < 1 << 62 else None
 
-    points: DataFrame with lat/lon double columns.
-    polys_df: dimension DataFrame (poly_id, wkb geometry).
-    Returns points columns + poly_id (inner), or semi/anti projections.
 
-    Plan shape: points -> [cell expr] -> equi-join broadcast(cover) ->
-    ONE refine filter (``_full OR ray_cast``; the udf tier NULL-gates
-    the poly_id so interior cells skip the ray-cast). With ``salt>0`` and
-    ``broadcast_cover=False``: cover replicated x salt, probe side salted
-    by a hash — the explicit skew treatment for the shuffle path.
+def _driver_polys(polys_df, poly_id_col: str, geom_col: str
+                  ) -> list[tuple[int, bytes | None]] | None:
+    """The collect gate: the polygon side as [(poly_id, wkb)] on the
+    driver, or None when it is over DRIVER_MAX_POLY_BYTES (estimated
+    before the collect; an unknown estimate falls through to the
+    collect — file-backed sides, the realistic huge case, always report
+    real bytes) or over DRIVER_MAX_POLYGONS rows (counted after it)."""
+    est = _est_bytes(polys_df)
+    if est is not None and est > DRIVER_MAX_POLY_BYTES:
+        return None
+    rows = polys_df.select(poly_id_col, geom_col).collect()
+    if len(rows) > DRIVER_MAX_POLYGONS:
+        return None
+    return [(r[poly_id_col], r[geom_col]) for r in rows]
 
-    ``distributed=True`` keeps the polygon side a DataFrame end to end
-    (covering via mapInPandas on executors; refine reads the geometry
-    as a joined column) — use for large polygon sides (parcels, not
-    countries) where a driver collect would OOM. ``salt``/
-    ``refine_mode`` apply to the driver path only; the distributed path
-    relies on AQE skew handling. ``broadcast_cover=None`` (default)
-    picks automatically: always broadcast on the driver path; on the
-    distributed path broadcast only while the estimated cover stays
-    driver-safe (~10^6 rows), else shuffle equi-join."""
+
+def _pip_driver(points, polys, res, lat_col, lon_col, poly_id_col):
+    """Driver tier: broadcast(driver cover) equi-join, then ONE filter
+    ``_full OR ray_cast``. A single pass: a union of interior/boundary
+    filters re-executes the whole upstream (scan -> cell -> join) once
+    per branch — measured as a duplicated heavy stage in the flagship
+    pipeline and 1.6-2.6x slower for the udf tier — and the upstream
+    scan, not the ray cast, is the expensive part at web scale."""
+    from pyspark.sql import functions as F
+    if res is None:
+        res = pick_resolution(polys)
+    cover, ring_map = polygon_cover(polys, res)
+    cover_df = points.sparkSession.createDataFrame(
+        [(int(p), int(c), bool(f)) for p, c, f in cover],
+        schema=f"{poly_id_col} long, _cell long, _full boolean")
+    joined = points.withColumn("_cell", cell_encode(lat_col, lon_col, res)) \
+        .join(F.broadcast(cover_df), "_cell", "inner")
+    if total_edges(ring_map) <= EXPR_REFINE_MAX_EDGES:
+        refine = refine_expr_col(ring_map, poly_id_col, lon_col, lat_col)
+    else:
+        refine = ray_cast_refine_udf(ring_map)(
+            F.when(~F.col("_full"), F.col(poly_id_col)),
+            F.col(lon_col), F.col(lat_col))
+    return joined.filter(F.col("_full") | refine).drop("_cell", "_full")
+
+
+def _pip_distributed(points, polys_df, res, lat_col, lon_col, poly_id_col,
+                     geom_col):
+    """Distributed tier: executor-side cover (``distributed_polygon_cover``)
+    equi-joined broadcast or shuffled-hash, then ONE filter deciding
+    interior cells, rectangle bounds and (for a non-rect residue) the
+    WKB ray cast, which reads the geometry from the joined cover row."""
     from pyspark.sql import functions as F
 
-    spark = points.sparkSession
-    # semi/anti need a per-row identity: re-joining on all point columns
-    # is null-unsafe (a matched row with a null passthrough column never
-    # equals itself and wrongly reappears in the anti output) and
-    # distinct() collapses legitimately duplicated input rows
-    if how in ("left_semi", "left_anti") and "_rid" not in points.columns:
-        # (the _rid guard keeps the r6 driver->distributed auto-route
-        # from re-materializing ids on re-entry)
-        # monotonically_increasing_id is nondeterministic (partition- and
-        # order-dependent): the points subtree is evaluated twice (once
-        # under `matched`, once as the probe side of _spatial_join_how),
-        # and a recompute downstream of a shuffle could assign DIFFERENT
-        # ids to the two evaluations — silently corrupting semi/anti
-        # output. Materialize the ids once so both branches read the
-        # same frozen rows (materialize(): localCheckpoint by default,
-        # reliable checkpoint() under spark.geospark.reliableCheckpoint).
-        points = materialize(points.withColumn(
-            "_rid", F.monotonically_increasing_id()))
-
-    if distributed:
-        # large polygon side: covering on executors, geometry delivered
-        # to the refine as a joined column — no driver collect anywhere
-        if res is None:
-            res = _pick_resolution_distributed(polys_df, geom_col)
-        # the cover arrives with its Python DETECTION pass already
-        # frozen inside distributed_polygon_cover (r5); the cover
-        # itself stays inline in every case.
-        cover_df = distributed_polygon_cover(
-            polys_df, res, poly_id_col, geom_col)
-        # the builder tags an all-rect cover; a general tier exists
-        # exactly when the tag is absent (replaces the r4 probe JOB
-        # that re-ran the covering just to ask). Since the matched set
-        # is now ONE filter pass (below), the cover has a single
-        # consumer and needs no cover-sized materialization — the
-        # per-polygon detection pass is frozen inside the builder, and
-        # the small per-poly covering re-runs per action, not the
-        # exploded cover.
-        has_general = not getattr(cover_df, "_geospark_pure_jvm", False)
-        if broadcast_cover is None:
-            # size-based choice: broadcasting the cover collects the
-            # exploded cover through the driver — fine at ~10^6 rows,
-            # GBs at 10^8. r6: the cover builder now reports the EXACT
-            # rect-cover row count (plus the non-rect residue, which
-            # the resolution picker aims at ~64 cells/poly), so the
-            # decision no longer mis-sizes an all-rect side by the
-            # 64x guess (measured at sf1: a 200k-box side has a 2.3M-
-            # row cover — broadcastable — but 200k*64=12.8M forced the
-            # shuffle join: 8.0 s vs 2.7 s for broadcast+wide probe).
-            # Above the cap: shuffle equi-join (AQE skew-handled).
-            stats = getattr(cover_df, "_geospark_cover_stats", None)
-            if stats is not None:
-                est = stats["rect_rows"] + stats["n_gen"] * 64
-            else:
-                est = polys_df.select(poly_id_col).count() * 64
-            cap = int(points.sparkSession.conf.get(
-                "spark.geospark.cover.broadcastMaxRows", "4000000"))
-            # r6 cost model: broadcasting saves shuffling the POINT
-            # side but pays (cover bytes x every executor) plus a
-            # driver-side relation build. When the point side is not
-            # much bigger than the cover (interactive / bench sizes),
-            # a shuffled-hash join with the cover as build side is
-            # strictly cheaper (measured at sf1: 1.4 s vs 2.3 s core);
-            # when points dwarf the cover (the 100 TB case) broadcast
-            # wins by orders of magnitude. Compare estimated bytes
-            # with a documented margin for the per-executor fanout.
-            try:
-                pts_bytes = int(points._jdf.queryExecution()
-                                .optimizedPlan().stats().sizeInBytes())
-            except Exception:
-                pts_bytes = None
-            cover_bytes = est * 64  # ~9 narrow columns per cover row
-            factor = int(points.sparkSession.conf.get(
-                "spark.geospark.cover.broadcastCostFactor", "8"))
-            worth_it = (pts_bytes is None
-                        or pts_bytes > factor * cover_bytes)
-            broadcast_cover = est <= cap and worth_it
-        if broadcast_cover:
-            # broadcast leaves the probe side exchange-free, so the
-            # whole candidate fanout + refine + partial agg runs at
-            # the SCAN's parallelism — which for a single-row-group
-            # parquet file is 1-6 tasks regardless of core count. One
-            # size-capped round-robin exchange of the (narrow) point
-            # side buys full-core fanout: 8.4 s -> 2.7 s at sf1
-            # (guide §2.6/§6; no-op at production scan widths).
-            from .par import fanout_repartition
-            points = fanout_repartition(points, force=True)
-        pts = points.withColumn("_cell",
-                                cell_encode(lat_col, lon_col, res))
-        # non-broadcast tier: hint the cover as the shuffled-hash BUILD
-        # side — sort-merge pays two full sorts and per-key buffering
-        # on a many-match join (measured 8.0 s vs 1.4 s at sf1); the
-        # hint degrades gracefully to SMJ when a build partition can't
-        # fit, and AQE skew-join still applies.
-        cov = (F.broadcast(cover_df) if broadcast_cover
-               else cover_df.hint("shuffle_hash"))
-        joined = pts.join(cov, "_cell", "inner")
-        # rectangle fast path: [x0, x1) x [y0, y1) replicates the
-        # even-odd ray cast EXACTLY for an axis-aligned rectangle
-        # (left/bottom edges inside, right/top outside) — pure JVM.
-        # Interior + rect-boundary are decided in ONE pass
-        # (`_full OR (_rect AND bounds)`): a union of per-tier filters
-        # re-executes the whole upstream scan once per tier (r4 —
-        # measured as duplicated heavy stages; the probe-side scan is
-        # the expensive part at web scale, the bounds compare is not).
-        jvm_pred = (
-            F.col("_full")
+    from .par import fanout_repartition
+    if res is None:
+        res = _pick_resolution_distributed(polys_df, geom_col)
+    cover_df = distributed_polygon_cover(polys_df, res, poly_id_col,
+                                         geom_col)
+    stats = cover_df._geospark_cover_stats
+    # the resolution picker aims the non-rect residue at ~64 cells/poly;
+    # a cover row is ~9 narrow columns, ~64 bytes
+    est = stats["rect_rows"] + stats["n_gen"] * 64
+    pts_bytes = _est_bytes(points)
+    if est <= BROADCAST_MAX_COVER_ROWS and (
+            pts_bytes is None or pts_bytes > BROADCAST_COST_FACTOR * est * 64):
+        # broadcast leaves the probe side exchange-free, so the whole
+        # fanout + refine runs at the SCAN's parallelism — 1-6 tasks for
+        # a single-row-group parquet file. One size-capped round-robin
+        # exchange of the (narrow) point side buys full-core fanout:
+        # 8.4 s -> 2.7 s at sf1 (no-op at production scan widths).
+        points = fanout_repartition(points, force=True)
+        cov = F.broadcast(cover_df)
+    else:
+        # cover as shuffled-hash BUILD side: sort-merge pays two full
+        # sorts on a many-match join (8.0 s vs 1.4 s at sf1); the hint
+        # degrades to SMJ when a build partition can't fit, and AQE
+        # skew-join still splits hot cells
+        cov = cover_df.hint("shuffle_hash")
+    joined = points.withColumn("_cell", cell_encode(lat_col, lon_col, res)) \
+        .join(cov, "_cell", "inner")
+    # [x0, x1) x [y0, y1) replicates the even-odd ray cast EXACTLY for an
+    # axis-aligned rectangle (left/bottom edges inside, right/top outside)
+    pred = (F.col("_full")
             | (F.col("_rect")
                & (F.col(lon_col) >= F.col("_bx0"))
                & (F.col(lon_col) < F.col("_bx1"))
                & (F.col(lat_col) >= F.col("_by0"))
                & (F.col(lat_col) < F.col("_by1"))))
-        drop_cols = ["_cell", "_full", "_rect",
-                     "_bx0", "_by0", "_bx1", "_by1", "_gwkb"]
-        if has_general:
-            # general (non-rectangle) residue, SAME single pass: the
-            # cover row carries the polygon wkb on general boundary
-            # cells (_gwkb, NULL everywhere else — see
-            # distributed_polygon_cover), so the refine reads the
-            # geometry from the joined row. The r4 shape re-joined
-            # polys_df and unioned per-tier filters — a second probe
-            # scan plus a second join; the probe scan is the expensive
-            # side at web scale. NULL rows cost O(1) in the udf batch.
-            refine = make_wkb_refine_udf()
-            matched = joined.filter(
-                jvm_pred | refine(F.col("_gwkb"), F.col(lon_col),
-                                  F.col(lat_col))).drop(*drop_cols)
-        else:
-            # all-rectangle side (tiles/boxes/parcels — the common
-            # storage shape): pure-JVM plan, no Python eval nodes
-            matched = joined.filter(jvm_pred).drop(*drop_cols)
-        return _spatial_join_how(points, matched, how)
+    if stats["n_gen"]:
+        # _gwkb is NULL everywhere but general boundary cells
+        pred = pred | ray_cast_refine_udf()(
+            F.col("_gwkb"), F.col(lon_col), F.col(lat_col))
+    return joined.filter(pred).drop("_cell", "_full", "_rect", "_bx0",
+                                    "_by0", "_bx1", "_by1", "_gwkb")
 
-    # r6 (VERDICT r5 #5): the driver tier assumes a dimension-sized
-    # polygon side; gate the collect on the optimizer's size estimate
-    # (zero extra jobs — a limit(cap+1) probe was measured at +0.45 s
-    # per call even on a 3-row dim, because collect-with-limit takes
-    # the incremental executeTake path) and auto-route oversized sides
-    # to the distributed covering instead of OOMing the driver at 100x
-    # scale. A post-collect row-count check backstops sides whose byte
-    # estimate lied.
-    cap_bytes = int(spark.conf.get(
-        "spark.geospark.pip.maxDriverPolyBytes", str(256 << 20)))
-    max_driver = int(spark.conf.get(
-        "spark.geospark.pip.maxDriverPolygons", "100000"))
-    try:
-        est_bytes = int(polys_df._jdf.queryExecution().optimizedPlan()
-                        .stats().sizeInBytes())
-        if est_bytes >= 1 << 62:
-            # Long.MaxValue sentinel: stats UNKNOWN (LogicalRDD —
-            # createDataFrame locals, checkpoints). Fall through to
-            # the collect + row-count backstop; file-backed sides (the
-            # realistic huge case) always report real bytes.
-            est_bytes = 0
-    except Exception:
-        est_bytes = 0
-    if est_bytes > cap_bytes:
-        return spatial_join(points, polys_df, res=res, lat_col=lat_col,
-                            lon_col=lon_col, poly_id_col=poly_id_col,
-                            geom_col=geom_col, how=how,
-                            broadcast_cover=broadcast_cover,
-                            distributed=True)
-    rows = polys_df.select(poly_id_col, geom_col).collect()
-    if len(rows) > max_driver:
-        return spatial_join(points, polys_df, res=res, lat_col=lat_col,
-                            lon_col=lon_col, poly_id_col=poly_id_col,
-                            geom_col=geom_col, how=how,
-                            broadcast_cover=broadcast_cover,
-                            distributed=True)
-    polys = [(r[poly_id_col], r[geom_col]) for r in rows]
-    if res is None:
-        res = pick_resolution(polys)
-    cover, ring_map = polygon_cover(polys, res)
-    cover_df = spark.createDataFrame(
-        [(int(p), int(c), bool(f)) for p, c, f in cover],
-        schema=f"{poly_id_col} long, _cell long, _full boolean")
 
-    pts = points.withColumn("_cell", cell_encode(lat_col, lon_col, res))
+def spatial_join(points, polys_df, *, res: int | None = None,
+                 lat_col: str = "lat", lon_col: str = "lon",
+                 poly_id_col: str = "zone_id", geom_col: str = "geom_wkb",
+                 how: str = "inner", distributed: bool = False):
+    """Point-in-polygon join.
 
-    if broadcast_cover is None:
-        broadcast_cover = True  # driver path: cover is small by contract
-    if broadcast_cover:
-        joined = pts.join(F.broadcast(cover_df), "_cell", "inner")
+    points: DataFrame with lat/lon double columns.
+    polys_df: polygon DataFrame (poly_id, wkb geometry).
+    Returns points columns + poly_id (inner), or the point rows with
+    (``left_semi``) or without (``left_anti``) a containing polygon.
+
+    A polygon side that passes the collect gate (DRIVER_MAX_POLY_BYTES,
+    DRIVER_MAX_POLYGONS) takes the driver tier, any other side the
+    distributed tier; ``distributed=True`` skips the gate. Plan shape
+    either way: points -> [cell expr] -> equi-join cover on cell -> ONE
+    refine filter."""
+    from pyspark.sql import functions as F
+
+    if how not in ("inner", "left_semi", "left_anti"):
+        raise ValueError(f"how={how!r}")
+    if how != "inner":
+        # semi/anti need a per-row identity: re-joining on all point
+        # columns is null-unsafe and distinct() collapses duplicated
+        # input rows. The id is minted under a name no user column
+        # takes (Spark resolves names case-insensitively), and
+        # materialized once: monotonically_increasing_id is partition-
+        # and order-dependent, and the points subtree is read twice
+        # (under `matched` and as the semi/anti probe side).
+        taken = {c.lower() for c in points.columns}
+        rid = "_rid"
+        while rid in taken:
+            rid = "_" + rid
+        points = materialize(points.withColumn(
+            rid, F.monotonically_increasing_id()))
+    polys = None if distributed else _driver_polys(polys_df, poly_id_col,
+                                                   geom_col)
+    if polys is None:
+        matched = _pip_distributed(points, polys_df, res, lat_col, lon_col,
+                                   poly_id_col, geom_col)
     else:
-        if salt > 0:
-            cover_df = cover_df.withColumn(
-                "_salt", F.explode(F.array(*[F.lit(i)
-                                             for i in range(salt)])))
-            pts = pts.withColumn(
-                "_salt", F.pmod(F.xxhash64(F.col(lat_col), F.col(lon_col)),
-                                F.lit(salt)).cast("int"))
-            joined = pts.join(cover_df, ["_cell", "_salt"], "inner") \
-                .drop("_salt")
-        else:
-            joined = pts.join(cover_df, "_cell", "inner")
-
-    if refine_mode == "auto":
-        # measured crossover (r5, 2M points, local[8], hugeMethodLimit
-        # 8000, both modes single-pass): expr vs udf walls — 72 edges
-        # 1.0/0.8 s, 288 edges 3.5/1.0, 576 edges 4.3/0.9, 4096 edges
-        # 23.6/1.1 (the unrolled CASE blows janino's 64 KB method cap
-        # past a few hundred edges: whole stage drops to interpreted;
-        # at 8192 building the expression OOMs the driver). The
-        # vectorized-pandas udf is flat in edge count. expr's
-        # remaining edge is a Python-free plan (no Arrow transfer, no
-        # python workers — and bit-identical DuckDB-twin semantics for
-        # the oracle queries), worth it only for small dims —
-        # countries/zones, not parcel tables.
-        refine_mode = "expr" if total_edges(ring_map) <= 128 else "udf"
-    if refine_mode == "expr":
-        # small dim: unroll the ray cast into a JVM expression and keep
-        # the join a SINGLE PASS — `_full OR ray_cast` in one filter.
-        # The union-of-two-filters alternative re-executes the whole
-        # upstream (scan -> extract -> cell -> broadcast join) once per
-        # branch: measured as a duplicated 16-task heavy stage in the
-        # flagship pipeline (r4) — the upstream scan is the expensive
-        # part at web scale, not the ray-cast, so evaluating the
-        # expression on interior rows too is the cheap side of the
-        # trade. Whole-stage codegen, zero Python either way.
-        matched = joined.filter(
-            F.col("_full")
-            | refine_expr_col(ring_map, poly_id_col, lon_col, lat_col)) \
-            .drop("_cell", "_full")
-    else:
-        # udf mode, single pass: Spark extracts Python UDFs from the
-        # plan unconditionally (no per-row short-circuit even under
-        # when/otherwise), so the udf DOES evaluate on interior rows —
-        # but the NULL-gate makes those rows O(1) inside the batch
-        # (NaN-masked before any ray-cast); the only interior cost is
-        # the Arrow transfer of (NULL, lon, lat). Measured vs the old
-        # two-pass interior/boundary union (r5, 2M cached + 6M parquet
-        # points, 4096/8192-edge dims, local[8]): single pass 1.6-2.6x
-        # faster in every case — the union re-executes the whole
-        # upstream (scan -> extract -> cell -> broadcast join) once
-        # per tier, and the upstream is the expensive side at web
-        # scale.
-        refine = make_refine_udf(ring_map)
-        matched = joined.filter(
-            F.col("_full")
-            | refine(F.when(~F.col("_full"), F.col(poly_id_col)),
-                     F.col(lon_col), F.col(lat_col))) \
-            .drop("_cell", "_full")
-    return _spatial_join_how(points, matched, how)
-
-
-def _spatial_join_how(points, matched, how: str):
+        matched = _pip_driver(points, polys, res, lat_col, lon_col,
+                              poly_id_col)
     if how == "inner":
         return matched
-    out_cols = [c for c in points.columns if c != "_rid"]
-    rids = matched.select("_rid").distinct()
-    if how == "left_semi":
-        return points.join(rids, "_rid", "left_semi").select(out_cols)
-    if how == "left_anti":
-        return points.join(rids, "_rid", "left_anti").select(out_cols)
-    raise ValueError(f"how={how!r}")
+    return points.join(matched.select(rid).distinct(), rid, how).drop(rid)
+
+
+_OPAQUE_NODES = ("Generate", "Join", "Aggregate", "Window")
+
+
+def _has_opaque_node(df) -> bool:
+    """Does the optimized plan of ``df`` hold an expensive node
+    (generate, join, aggregate, window)? Matches plan node names, never
+    column names or expression strings."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if any(m in node.nodeName() for m in _OPAQUE_NODES):
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
 
 
 def pip_tile_counts(points, polys_df, *, res: int | None = None,
@@ -778,9 +646,8 @@ def pip_tile_counts(points, polys_df, *, res: int | None = None,
                     poly_id_col: str = "zone_id", geom_col: str = "geom_wkb",
                     extra_keys: list[str] | None = None,
                     count_col: str = "n_docs"):
-    """Aggregate pushdown through the PIP join (r5, VERDICT r4
-    Next-round #2): per-tile per-polygon counts WITHOUT flowing every
-    point through the join + ray-cast.
+    """Aggregate pushdown through the PIP join: per-tile per-polygon
+    counts WITHOUT flowing every point through the join + ray-cast.
 
     Output-equivalent to
     ``tile_counts(spatial_join(points, polys), tile_res,
@@ -804,61 +671,31 @@ def pip_tile_counts(points, polys_df, *, res: int | None = None,
     memory bandwidth past ~8 threads on one box, and the dominant
     shuffle at 10^12 rows — drops by that factor.
 
+    A polygon side that fails the collect gate of ``spatial_join``
+    counts through the distributed tier instead.
+
     NOTE: ``points`` is consumed by two subtrees (the pre-aggregate
-    and the boundary refine). Feed it a materialized source (parquet
-    scan / checkpointed stage output, as the flagship pipeline's sink
-    layout provides). r6 (VERDICT r5 #6): the contract is now
-    self-enforcing — a points plan that carries an opaque/expensive
-    stage (Python eval, generate, join, aggregate) is materialize()'d
-    once instead of silently recomputing per subtree; plain
-    scan/project/filter plans pass through untouched.
+    and the boundary refine). A points plan that carries an expensive
+    stage (generate, join, aggregate, window) is materialize()'d once
+    instead of recomputing per subtree; plain scan/project/filter plans
+    pass through untouched.
     """
     from pyspark.sql import functions as F
 
     spark = points.sparkSession
     extra = list(extra_keys or [])
-    try:
-        plan_str = points._jdf.queryExecution().optimizedPlan() \
-            .toString()
-    except Exception:
-        plan_str = ""
-    if any(m in plan_str for m in (
-            "PythonUDF", "Generate", "Join", "Aggregate", "Window")):
+    if _has_opaque_node(points):
         points = materialize(points)
-    # r6 (VERDICT r5 #5): size-gated collect + auto-fallback — above
-    # the driver cap, compute per-(poly, tile) counts through the
-    # fully distributed join instead of collecting the polygon side.
-    # Same zero-job stats gate as spatial_join (a limit-probe collect
-    # measured +0.45 s/call even on tiny dims).
-    cap_bytes = int(spark.conf.get(
-        "spark.geospark.pip.maxDriverPolyBytes", str(256 << 20)))
-    max_driver = int(spark.conf.get(
-        "spark.geospark.pip.maxDriverPolygons", "100000"))
-    try:
-        est_bytes = int(polys_df._jdf.queryExecution().optimizedPlan()
-                        .stats().sizeInBytes())
-        if est_bytes >= 1 << 62:
-            # Long.MaxValue sentinel: stats UNKNOWN (LogicalRDD —
-            # createDataFrame locals, checkpoints). Fall through to
-            # the collect + row-count backstop; file-backed sides (the
-            # realistic huge case) always report real bytes.
-            est_bytes = 0
-    except Exception:
-        est_bytes = 0
-    if est_bytes <= cap_bytes:
-        prows = polys_df.select(poly_id_col, geom_col).collect()
-    if est_bytes > cap_bytes or len(prows) > max_driver:
-        out = spatial_join(points, polys_df, res=res, lat_col=lat_col,
-                           lon_col=lon_col, poly_id_col=poly_id_col,
-                           geom_col=geom_col, distributed=True)
-        tr = tile_res if tile_res is not None else (
-            res if res is not None else
-            _pick_resolution_distributed(polys_df, geom_col))
-        return (out.withColumn("cell",
-                               cell_encode(lat_col, lon_col, tr))
+    polys = _driver_polys(polys_df, poly_id_col, geom_col)
+    if polys is None:
+        if res is None:
+            res = _pick_resolution_distributed(polys_df, geom_col)
+        out = _pip_distributed(points, polys_df, res, lat_col, lon_col,
+                               poly_id_col, geom_col)
+        tr = tile_res if tile_res is not None else res
+        return (out.withColumn("cell", cell_encode(lat_col, lon_col, tr))
                 .groupBy(poly_id_col, "cell", *extra)
                 .agg(F.count(F.lit(1)).alias(count_col)))
-    polys = [(r[poly_id_col], r[geom_col]) for r in prows]
     if res is None:
         res = pick_resolution(polys)
     if tile_res is None:

@@ -1816,7 +1816,7 @@ def cell_gini(points, res: int, *, lat_col: str = "lat",
     of the point count over OCCUPIED cells, in floor ppm: 0 = every
     occupied cell carries the same load, ->1e6 = one cell carries
     everything. The single-number skew telemetry a partitioner wants
-    BEFORE choosing salting/AQE thresholds (BENCH/SKEW.md measures
+    BEFORE choosing AQE skew-join thresholds (BENCH/SKEW.md measures
     what skew costs; this measures how much the data has).
 
     Exact rank identity: with counts x_1 <= ... <= x_n (ties in any

@@ -2951,7 +2951,7 @@ _GINI_RES = 5
 def q_cell_gini(spark, sf_dir):
     """Spatial concentration (r5.30): exact Gini coefficient of the
     event count over occupied res-5 cells — the one-number skew
-    telemetry a partitioner reads before picking salt factors
+    telemetry a partitioner reads before picking skew thresholds
     (operators/tiles.cell_gini docstring)."""
     from .operators.tiles import cell_gini
     return cell_gini(_traj_pts(spark, sf_dir), _GINI_RES)

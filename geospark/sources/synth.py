@@ -12,8 +12,8 @@ committed extractor over ``html``, making the byte-identical invariant
 true by construction and locked by goldens.
 
 Locations: Zipf-weighted mixture over 12 city hotspots + uniform
-background (FIXTURES.md §3.1) — hot cells are real, so salting and AQE
-skew handling are exercised at test scale (SURVEY.md §7.3).
+background (FIXTURES.md §3.1) — hot cells are real, so AQE skew
+handling is exercised at test scale (SURVEY.md §7.3).
 """
 
 from __future__ import annotations

@@ -15,7 +15,7 @@ from geospark.functions.geometry import (_measures_batch, _st_astext_batch,
                                          _st_dims_batch)
 from geospark.kernels.corpus import SINGLE_FIXTURES
 from geospark.kernels.geom import format_wkt, parse_wkt
-from geospark.kernels.ops import geom_area, geom_centroid
+from geospark.kernels.ops import geom_area, geom_centroid, point_in_rings
 from geospark.kernels.wkb import parse_wkb, write_wkb
 
 
@@ -116,12 +116,24 @@ class TestBatchMeasures:
         assert area.size == 0 and cx.size == 0
 
 
+def _big_endian_polygon(rings: list[np.ndarray]) -> bytes:
+    out = b"\x00" + struct.pack(">II", 3, len(rings))
+    for r in rings:
+        out += struct.pack(">I", len(r)) + r.astype(">f8").tobytes()
+    return out
+
+
 class TestBatchRefineParity:
-    def test_wkb_refine_ok_path_matches_fallback(self):
-        """The PolygonBatch-fed ray cast inside make_wkb_refine_udf's
-        fast path must equal the _geom_rings/parse_wkb route."""
+    def test_wkb_refine_ok_path_matches_fallback(self, monkeypatch):
+        """The PolygonBatch-fed ray cast of the WKB-keyed refine's fast
+        path must equal the _geom_rings/parse_wkb route. Then
+        joins.ray_cast_refine keyed by poly id (ring map) and keyed by
+        WKB bytes (batch decode) must give identical booleans, equal to
+        that route, 500 points per polygon, over the random LE polygons
+        (never the general codec) plus a multipolygon, a big-endian
+        polygon with a hole, a null and an EMPTY polygon."""
+        import geospark.operators.joins as J
         from geospark.functions.geometry import _series_to_wkb_buffers
-        from geospark.kernels.ops import point_in_rings
         from geospark.kernels.wkb import parse_polygon_wkb_buffer
         rng = np.random.default_rng(9)
         polys = []
@@ -150,6 +162,46 @@ class TestBatchRefineParity:
             g = parse_wkb(w)
             want = point_in_rings(px, py, [r[:, :2] for r in g.rings])
             assert np.array_equal(got, want)
+
+        polys.append(write_wkb(parse_wkt(
+            "MULTIPOLYGON (((-9 -9, -2 -9, -2 -2, -9 -2, -9 -9)), "
+            "((1 1, 8 1, 4 9, 1 1)))")))
+        shell = np.array([[-8.0, -8], [8, -8], [8, 8], [-8, 8], [-8, -8]])
+        hole = np.array([[-3.0, -3], [3, -3], [3, 3], [-3, 3], [-3, -3]])
+        polys.append(_big_endian_polygon([shell, hole]))
+        polys.append(None)
+        polys.append(write_wkb(parse_wkt("POLYGON EMPTY")))
+        n = 500 * len(polys)
+        px = rng.uniform(-12, 12, n)
+        py = rng.uniform(-12, 12, n)
+        pid = np.repeat(np.arange(len(polys)), 500)
+        rng.shuffle(pid)
+        want = np.zeros(n, dtype=bool)
+        for k, w in enumerate(polys):
+            m = pid == k
+            for rings in (J._geom_rings(parse_wkb(w)) if w else []):
+                want[m] |= point_in_rings(px[m], py[m], rings)
+        for k in (25, 26):  # multipolygon, holed big-endian polygon
+            assert want[pid == k].any() and not want[pid == k].all()
+        _cover, ring_map = J.polygon_cover(list(enumerate(polys)), 6)
+        by_id = J.ray_cast_refine(pd.Series(pid), px, py, ring_map)
+        general = []
+        real = J.parse_wkb
+
+        def spy(w):
+            general.append(bytes(w))
+            return real(w)
+
+        monkeypatch.setattr(J, "parse_wkb", spy)
+        by_wkb = J.ray_cast_refine(
+            pd.Series([polys[i] for i in pid], dtype=object), px, py)
+        assert general and not set(general) & set(polys[:25])
+        assert np.array_equal(by_id, by_wkb)
+        assert np.array_equal(by_wkb, want)
+        # null keys (interior rows the JVM already decided) are False
+        gated = pd.Series(pid, dtype="float64").where(pid % 2 == 0)
+        assert not J.ray_cast_refine(gated, px, py, ring_map)[
+            pid % 2 == 1].any()
 
 
 class TestLengthNpoints:

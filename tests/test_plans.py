@@ -49,23 +49,6 @@ def test_pip_join_is_broadcast_and_jvm_only(spark):
     assert "MapInPandas" not in p
 
 
-def test_pip_join_udf_mode_is_single_pass(spark):
-    # r5: the udf tier is a SINGLE `_full OR udf` filter (NULL-gated
-    # poly_id makes interior rows O(1) in the batch) — no
-    # interior/boundary Union re-executing the upstream per tier
-    from geospark.operators.joins import spatial_join
-    import geospark.queries as q
-    pts = q._cust_points(spark, SF)
-    df = spatial_join(pts, q.fixed_zones_df(spark), res=q.RES_COARSE,
-                      refine_mode="udf")
-    p = _plan(spark, df)
-    assert "BroadcastHashJoin" in p
-    assert "ArrowEvalPython" in p  # the refine
-    tree = p.split("\n\n")[0]
-    assert tree.count("Scan parquet") == 1
-    assert "Union" not in tree
-
-
 def test_flagship_pipeline_is_python_free(spark):
     import __spark_entry__ as e
     p = _plan(spark, e.entry(spark))
@@ -213,33 +196,6 @@ def test_zorder_key_is_codegen_bit_math(spark):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     # '*' prefixes mark whole-stage-codegen'd nodes in formatted plans
     assert "* Project" in p
-
-
-def test_salted_join_partitions_on_cell_and_salt(spark):
-    """salt>0 on the non-broadcast path must replicate the cover S ways
-    and key BOTH shuffle sides by (_cell, _salt) — the hot-cell rows
-    then spread over S reducers instead of one."""
-    import geospark.queries as q
-    from geospark.operators.joins import spatial_join
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # the tiny test cover would auto-broadcast (no shuffle at all);
-    # at the scale the salted path exists for, the cover exceeds the
-    # threshold — force the shuffle shape the test is about
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        pts = q._cust_points(spark, SF)
-        out = spatial_join(pts, q.fixed_zones_df(spark), res=6,
-                           broadcast_cover=False, salt=8)
-        p = _plan(spark, out)
-        assert "_salt" in p
-        # both join inputs hash-partition on the composite key
-        assert p.count("hashpartitioning(_cell") >= 2
-        assert p.count("_salt") >= 4  # key on probe + build exchanges
-        unsalted = spatial_join(pts, q.fixed_zones_df(spark), res=6,
-                                broadcast_cover=False, salt=0)
-        assert "_salt" not in _plan(spark, unsalted)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_pip_join_single_pass_one_scan(spark):

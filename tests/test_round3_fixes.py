@@ -1,6 +1,7 @@
 """Round-3 fixes: connected-components convergence contract +
-large-star/small-star, auto cover-distribution choice, kNN persist
-hygiene, semi/anti row-identity determinism."""
+large-star/small-star, kNN persist hygiene, semi/anti row-identity
+determinism (the auto cover-distribution choice is tested in
+test_joins.py)."""
 
 from __future__ import annotations
 
@@ -55,91 +56,6 @@ class TestConnectedComponents:
         out = {(r.doc_id, r.cluster_id) for r in
                connected_components(pairs, algorithm="star").collect()}
         assert out == {(5, 5), (9, 5), (1, 1), (2, 1)}
-
-
-class TestAutoCoverChoice:
-    def _pts(self, spark, n=2000):
-        return spark.range(n).select(
-            F.col("id").alias("pid"),
-            ((F.col("id") % 170).cast("double") - 85.0).alias("lat"),
-            ((F.col("id") % 350).cast("double") - 175.0).alias("lon"))
-
-    def _boxes(self, spark, n, half=0.505):
-        from geospark.functions.geometry import st_geomfromtext
-        cx = ((F.col("id") * 3) % 300).cast("double") - 150.0
-        cy = ((F.col("id") * 7) % 150).cast("double") - 75.0
-        x0, y0 = (cx - half).cast("string"), (cy - half).cast("string")
-        x1, y1 = (cx + half).cast("string"), (cy + half).cast("string")
-        wkt = F.concat(F.lit("POLYGON (("),
-                       x0, F.lit(" "), y0, F.lit(", "),
-                       x1, F.lit(" "), y0, F.lit(", "),
-                       x1, F.lit(" "), y1, F.lit(", "),
-                       x0, F.lit(" "), y1, F.lit(", "),
-                       x0, F.lit(" "), y0, F.lit("))"))
-        return spark.range(n).select(
-            F.col("id").alias("zone_id"),
-            st_geomfromtext(wkt).alias("geom_wkb"))
-
-    @staticmethod
-    def _plan(df) -> str:
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
-
-    def test_large_cover_auto_shuffles_not_broadcast(self, spark):
-        from geospark.operators.joins import spatial_join
-        # r6: the auto gate now uses the EXACT exploded-cover row count
-        # (cover stats) against spark.geospark.cover.broadcastMaxRows —
-        # 16500 small boxes genuinely fit a broadcast under the default
-        # cap, so pin the over-cap branch by lowering the cap instead.
-        # Catalyst still broadcasts the small polys geometry dim inside
-        # the refine — that one is wanted — so compare exchange COUNTS
-        # against the forced plan rather than asserting zero broadcasts.
-        pts, boxes = self._pts(spark), self._boxes(spark, 16500)
-        # a tiny Range-backed test dim looks broadcastable to Catalyst's
-        # own size estimate whatever we do; disable the automatic
-        # threshold so the plan shows only OUR explicit broadcast hint
-        # (at real scale the cover's stats would be large and Catalyst
-        # would agree with the auto choice)
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.geospark.cover.broadcastMaxRows", "1000")
-        try:
-            auto = self._plan(spatial_join(pts, boxes, res=7,
-                                           distributed=True))
-            forced_on = self._plan(spatial_join(pts, boxes, res=7,
-                                                distributed=True,
-                                                broadcast_cover=True))
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-            spark.conf.unset("spark.geospark.cover.broadcastMaxRows")
-        assert auto.count("BroadcastExchange") \
-            < forced_on.count("BroadcastExchange")
-        assert auto.count("SortMergeJoin") \
-            + auto.count("ShuffledHashJoin") > 0
-
-    def test_small_cover_auto_broadcasts_and_paths_agree(self, spark):
-        from geospark.operators.joins import spatial_join
-        pts = self._pts(spark)
-        boxes = self._boxes(spark, 300, half=2.505)
-        # r6: auto = under-cap AND worth-it (point side >> cover). The
-        # synthetic point side here is tiny, so the cost model rightly
-        # prefers the shuffled-hash join; zero the factor to pin the
-        # under-cap broadcast branch this test is about.
-        spark.conf.set("spark.geospark.cover.broadcastCostFactor", "0")
-        try:
-            auto = spatial_join(pts, boxes, res=7, distributed=True)
-            plan = auto._sc._jvm.PythonSQLUtils.explainString(
-                auto._jdf.queryExecution(), "formatted")
-            assert "BroadcastExchange" in plan
-        finally:
-            spark.conf.unset("spark.geospark.cover.broadcastCostFactor")
-        forced = spatial_join(pts, boxes, res=7, distributed=True,
-                              broadcast_cover=False)
-        a = {tuple(r) for r in
-             auto.select("pid", "zone_id").collect()}
-        b = {tuple(r) for r in
-             forced.select("pid", "zone_id").collect()}
-        assert a == b and len(a) > 0
 
 
 class TestKnnPersistHygiene:

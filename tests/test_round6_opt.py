@@ -1,11 +1,9 @@
 """Round-6 optimization tests.
 
 Pins the r6 scale/efficiency changes:
-  * spatial_join driver tier auto-routes to the distributed covering
-    above spark.geospark.pip.maxDriverPolygons (VERDICT r5 #5) with
-    identical results;
-  * pip_tile_counts inherits the same bounded-collect fallback and
-    self-enforces its materialized-points contract (VERDICT r5 #6);
+  * pip_tile_counts self-enforces its materialized-points contract
+    (VERDICT r5 #6); the driver collect gate it shares with
+    spatial_join is tested in test_joins.py;
   * spatial_join_polygons' r6 row-level refine matches brute force on
     a MIXED side (rectangles x triangles — exercises the general
     branch the all-rect bench shape skips);
@@ -64,58 +62,6 @@ def _pts(spark, n=4000):
          .cast("double") - 170.0).alias("lon"))
 
 
-class TestDriverCollectGate:
-    def test_spatial_join_auto_routes_above_cap(self, spark):
-        """Above the polygon cap the driver tier must hand off to the
-        distributed covering — same rows, no driver-side cover."""
-        from geospark.operators.joins import spatial_join
-        pts, boxes = _pts(spark), _boxes(spark, 300)
-        want = {tuple(r) for r in
-                spatial_join(pts, boxes, res=6, distributed=True)
-                .select("pid", "zone_id").collect()}
-        spark.conf.set("spark.geospark.pip.maxDriverPolygons", "50")
-        try:
-            routed = spatial_join(pts, boxes, res=6)
-            plan = routed._sc._jvm.PythonSQLUtils.explainString(
-                routed._jdf.queryExecution(), "formatted")
-            got = {tuple(r) for r in
-                   routed.select("pid", "zone_id").collect()}
-        finally:
-            spark.conf.unset("spark.geospark.pip.maxDriverPolygons")
-        assert got == want and len(got) > 0
-        # the driver cover is a createDataFrame -> LocalTableScan; the
-        # distributed cover is not
-        assert "LocalTableScan" not in plan.split("\n\n")[0]
-
-    def test_spatial_join_semi_auto_route_matches(self, spark):
-        from geospark.operators.joins import spatial_join
-        pts, boxes = _pts(spark), _boxes(spark, 120)
-        want = {r.pid for r in
-                spatial_join(pts, boxes, res=6, how="left_semi")
-                .collect()}
-        spark.conf.set("spark.geospark.pip.maxDriverPolygons", "50")
-        try:
-            got = {r.pid for r in
-                   spatial_join(pts, boxes, res=6, how="left_semi")
-                   .collect()}
-        finally:
-            spark.conf.unset("spark.geospark.pip.maxDriverPolygons")
-        assert got == want and len(got) > 0
-
-    def test_pip_tile_counts_auto_routes_above_cap(self, spark):
-        from geospark.operators.joins import pip_tile_counts
-        pts, boxes = _pts(spark), _boxes(spark, 200)
-        want = {tuple(r) for r in
-                pip_tile_counts(pts, boxes, res=6).collect()}
-        spark.conf.set("spark.geospark.pip.maxDriverPolygons", "50")
-        try:
-            got = {tuple(r) for r in
-                   pip_tile_counts(pts, boxes, res=6).collect()}
-        finally:
-            spark.conf.unset("spark.geospark.pip.maxDriverPolygons")
-        assert got == want and len(got) > 0
-
-
 class TestPipTileCountsMaterializeGuard:
     def _count_materialize(self, monkeypatch):
         import geospark.operators.joins as J
@@ -150,6 +96,21 @@ class TestPipTileCountsMaterializeGuard:
         pip_tile_counts(q._cust_points(spark, SF),
                         q.fixed_zones_df(spark), res=6)
         assert sum(calls) == 0
+
+    def test_window_named_column_scan_passes_through(self, spark,
+                                                     monkeypatch,
+                                                     tmp_path):
+        """The opaque-plan check reads plan node names: a plain parquet
+        scan with a column NAMED like a plan node must not be
+        checkpointed."""
+        from geospark.operators.joins import pip_tile_counts
+        _pts(spark, 500).withColumn("Window", F.lit(1)) \
+            .write.parquet(str(tmp_path / "pts"))
+        calls = self._count_materialize(monkeypatch)
+        out = pip_tile_counts(spark.read.parquet(str(tmp_path / "pts")),
+                              _boxes(spark, 40), res=6)
+        assert sum(calls) == 0
+        assert out.count() > 0
 
 
 class TestPolyJoinMixedTiers:

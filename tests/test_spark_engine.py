@@ -107,31 +107,6 @@ def test_spatial_join_resolution_invariance(spark, geo):
     assert a == b
 
 
-def test_spatial_join_salted_shuffle_path(spark, geo):
-    from geospark.operators.joins import spatial_join
-    from geospark.sources.synth import zones_df
-    zones = zones_df(spark)
-    a = set((r.url, r.zone_id) for r in
-            spatial_join(geo, zones, res=8).collect())
-    b = set((r.url, r.zone_id) for r in
-            spatial_join(geo, zones, res=8, broadcast_cover=False,
-                         salt=4).collect())
-    assert a == b
-
-
-def test_spatial_join_refine_modes_agree(spark, geo):
-    """The codegen'd expression refine and the pandas-UDF refine are the
-    same arithmetic — outputs must be identical."""
-    from geospark.operators.joins import spatial_join
-    from geospark.sources.synth import zones_df
-    zones = zones_df(spark)
-    a = set((r.url, r.zone_id) for r in
-            spatial_join(geo, zones, res=8, refine_mode="expr").collect())
-    b = set((r.url, r.zone_id) for r in
-            spatial_join(geo, zones, res=8, refine_mode="udf").collect())
-    assert a == b
-
-
 def test_spatial_join_semi_anti_partition(spark, geo):
     from geospark.operators.joins import spatial_join
     from geospark.sources.synth import zones_df

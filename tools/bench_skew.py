@@ -1,32 +1,41 @@
-"""Skew evidence under load (r3 VERDICT item 7): one res-8 cell holds
-~30% of the points (hot-city shape); the salted shuffle join and the
-distributed-covering path must stay within ~1.5x of the same join on
-uniform data of identical size.
+"""Skew evidence under load: one res-8 cell holds ~30% of the points
+(hot-city shape); both PIP tiers must stay within ~1.5x of the same
+join on uniform data of identical size.
+
+    python tools/bench_skew.py
 
 Protocol: materialize a skewed and a uniform table of N rows once
-(untimed), then time spatial_join over each through
-  * shuffle : non-broadcast equi-join, salt=0 (the skew victim)
-  * salted  : non-broadcast equi-join, salt=8 + AQE skew-join
-  * distributed : executor-covering path (broadcast cover)
-min-of-3 per combination. Appends results to BENCH/SKEW.md and prints
-one JSON line.
+(untimed, under the system temp dir), then time spatial_join over each
+through
+  * driver      : driver-collected cover, broadcast equi-join (hot
+                  cells cost no extra shuffle)
+  * distributed : executor-side cover, broadcast or shuffled-hash by
+                  the cost model (AQE skew-join splits hot cells)
+min-of-3 per combination. Appends a dated table to BENCH/SKEW.md and
+prints one JSON line. Env: SPARK_GRAFT_SKEW_ROWS (default 3000000),
+SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_DRIVER_MEM (default 24g).
 """
 
 from __future__ import annotations
 
-import sys
-sys.path.insert(0, "/root/repo")
-
-import json
 import os
-import time
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import datetime  # noqa: E402
+import json  # noqa: E402
+import tempfile  # noqa: E402
+import time  # noqa: E402
 
 N = int(os.environ.get("SPARK_GRAFT_SKEW_ROWS", "3000000"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
 HOT_FRAC = 0.3
-SALT = 8
 
 
-def build_session(cpus: int = 32):
+def build_session(cpus: int = CPUS):
     from pyspark.sql import SparkSession
 
     from geospark.conf import apply_tuned
@@ -35,7 +44,7 @@ def build_session(cpus: int = 32):
             .config("spark.sql.shuffle.partitions", str(cpus))
             .config("spark.ui.enabled", "false")
             .config("spark.ui.showConsoleProgress", "false")
-            .config("spark.driver.memory", "24g")
+            .config("spark.driver.memory", DRIVER_MEM)
             .getOrCreate())
 
 
@@ -44,7 +53,8 @@ def materialize(spark, skewed: bool) -> str:
     one res-8 cell (~0.7 x 1.4 deg at (10, 20)), rest world-uniform."""
     from pyspark.sql import functions as F
     tag = "skew" if skewed else "unif"
-    path = f"/tmp/geospark_skewbench_{tag}_{N}"
+    path = os.path.join(tempfile.gettempdir(),
+                        f"geospark_skewbench_{tag}_{N}")
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
     df = spark.range(N)
@@ -96,42 +106,37 @@ def timed(fn, reps: int = 3) -> float:
 
 
 def main() -> None:
-    from pyspark.sql import functions as F  # noqa: F401
     from geospark.operators.joins import spatial_join
     spark = build_session()
     spark.sparkContext.setLogLevel("ERROR")
     zdf = zones(spark)
-    out = {"rows": N, "hot_frac": HOT_FRAC, "salt": SALT, "paths": {}}
+    out = {"rows": N, "hot_frac": HOT_FRAC, "cpus": CPUS,
+           "driver_mem": DRIVER_MEM, "paths": {}}
     for tag, skewed in (("uniform", False), ("skewed", True)):
-        src = materialize(spark, skewed)
-        pts = spark.read.parquet(src)
+        pts = spark.read.parquet(materialize(spark, skewed))
 
-        def shuffle_join():
-            return spatial_join(pts, zdf, res=8, broadcast_cover=False,
-                                salt=0).groupBy("zone_id").count().count()
-
-        def salted_join():
-            return spatial_join(pts, zdf, res=8, broadcast_cover=False,
-                                salt=SALT).groupBy("zone_id").count() \
-                .count()
+        def driver_join():
+            return spatial_join(pts, zdf, res=8) \
+                .groupBy("zone_id").count().count()
 
         def distributed_join():
             return spatial_join(pts, zdf, res=8, distributed=True) \
                 .groupBy("zone_id").count().count()
 
         out["paths"][tag] = {
-            "shuffle_salt0": timed(shuffle_join),
-            "salted": timed(salted_join),
+            "driver": timed(driver_join),
             "distributed": timed(distributed_join),
         }
     u, s = out["paths"]["uniform"], out["paths"]["skewed"]
     out["skew_over_uniform"] = {
         k: round(s[k] / u[k], 3) for k in u}
-    out["salted_within_1_5x"] = out["skew_over_uniform"]["salted"] <= 1.5
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/SKEW.md", "a") as f:
-        f.write(f"\n## skew run rows={N} hot={HOT_FRAC} salt={SALT}\n\n")
-        f.write("| path | uniform s | skewed s | ratio |\n|---|---|---|---|\n")
+    out["within_1_5x"] = all(r <= 1.5
+                             for r in out["skew_over_uniform"].values())
+    with open(os.path.join(ROOT, "BENCH", "SKEW.md"), "a") as f:
+        f.write(f"\n## skew run {datetime.date.today()} rows={N} "
+                f"hot={HOT_FRAC} local[{CPUS}] driver={DRIVER_MEM}\n\n")
+        f.write("| path | uniform s | skewed s | ratio |\n"
+                "|---|---|---|---|\n")
         for k in u:
             f.write(f"| {k} | {u[k]} | {s[k]} | "
                     f"{out['skew_over_uniform'][k]} |\n")
